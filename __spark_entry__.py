@@ -1982,16 +1982,6 @@ def _q_kg_access_path_match(spark, sf_dir):
     return m.groupBy("kind").agg(F.count("*").alias("n")).orderBy("kind")
 
 
-def _q_kg_ast_json_tree_arrow(spark, sf_dir):
-    """Single-pass Arrow walker variant — must hash-match the declarative
-    walker's oracle exactly (cross-engine parity of the two shapes)."""
-    from codepropertygraph_spark.sources import json_ingest
-
-    d = td.ensure_generated(td.tier_of_sf_dir(sf_dir))
-    aj = spark.read.parquet(f"{d}/ast_json.parquet")
-    return json_ingest.json_tree_arrow(aj, "ast_id", "ast")
-
-
 def _q_kg_mention_ast_link(spark, sf_dir):
     """MemberAccessLinker analog (A14): link the FLAT extraction's mention
     occurrences to the DEEP AST's field nodes — the subj/obj leaves of the
@@ -2002,7 +1992,7 @@ def _q_kg_mention_ast_link(spark, sf_dir):
 
     d = td.ensure_generated(td.tier_of_sf_dir(sf_dir))
     aj = spark.read.parquet(f"{d}/ast_json.parquet")
-    tree = json_ingest.json_tree_arrow(aj, "ast_id", "ast")
+    tree = json_ingest.json_tree(aj, "ast_id", "ast")
     surf = tree.where(F.col("path").rlike(r"\.(subj|obj)\.surface$")).select(
         "ast_id",
         F.col("parent_path").alias("arg_path"),
@@ -2045,7 +2035,7 @@ def _q_kg_reaching_defs_fields(spark, sf_dir):
 
     d = td.ensure_generated(td.tier_of_sf_dir(sf_dir))
     aj = spark.read.parquet(f"{d}/ast_json.parquet")
-    tree = json_ingest.json_tree_arrow(aj, "ast_id", "ast")
+    tree = json_ingest.json_tree(aj, "ast_id", "ast")
     ad = _alias_dict(spark, sf_dir)
     merge = canonicalize.merge_map(ad).localCheckpoint(eager=True)
     surf = tree.where(
@@ -2110,7 +2100,7 @@ def _q_kg_reaching_defs_fields_ext(spark, sf_dir):
 
     d = td.ensure_generated(td.tier_of_sf_dir(sf_dir))
     aj = spark.read.parquet(f"{d}/ast_json.parquet")
-    tree = json_ingest.json_tree_arrow(aj, "ast_id", "ast")
+    tree = json_ingest.json_tree(aj, "ast_id", "ast")
     ad = _alias_dict(spark, sf_dir)
     merge = canonicalize.merge_map(ad).localCheckpoint(eager=True)
     surf = tree.where(
@@ -2691,7 +2681,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "kg_reaching_defs_fields": _q_kg_reaching_defs_fields,
     "kg_traversal_mentions": _q_kg_traversal_mentions,
     "kg_traversal_coalesce": _q_kg_traversal_coalesce,
-    "kg_ast_json_tree_arrow": _q_kg_ast_json_tree_arrow,
     "kg_access_path_match": _q_kg_access_path_match,
     "kg_mention_ast_link": _q_kg_mention_ast_link,
     "events_json_extract": _q_events_json_extract,
@@ -2762,7 +2751,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 GATE_DEFERRED = [
     "kg_raw_triples_udf",       # pandas-UDF variant of kg_raw_triples
     "kg_merge_map_tokenblock",  # token-blocking variant of kg_merge_map
-    "kg_ast_json_tree_arrow",   # Arrow-walker variant of kg_ast_json_tree
     "ann_cosine_topk_lsh",      # LSH variant of ann_cosine_topk
     "ann_cosine_topk_ivf",      # IVF variant of ann_cosine_topk
     "dedup_embedding_cosine",   # bucketed variant of _exact (r4-green)
@@ -2803,7 +2791,7 @@ GATE_DEFERRED = [
                                 # final_triples for every in-window
                                 # kg_entity_*/kg_new_facts query
     "kg_ast_json_tree",         # unchanged since r3 green; leads the r6
-                                # window with its deferred arrow variant
+                                # window
     # Displaced by kg_bgp_optional (never greened, same priority rule):
     "events_kmv_users",         # its two-phase rewrite this round is
                                 # output-bit-identical by the merge-
@@ -4160,8 +4148,6 @@ ORACLES["kg_access_path_match"] = f"""
            count(*) AS n
     FROM m GROUP BY 1 ORDER BY 1
 """
-
-ORACLES["kg_ast_json_tree_arrow"] = ORACLES["kg_ast_json_tree"]
 
 ORACLES["multimodal_resize"] = """
     WITH dec AS (

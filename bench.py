@@ -132,16 +132,12 @@ def run_bench(master: str, replicate: int = 1, only: str | None = None) -> dict:
     timed("kg_merge_map", lambda: _force(canonicalize.merge_map(ad)), runs=3)
 
     def _json_tree():
-        # the single-pass Arrow walker (the throughput shape); the
-        # declarative per-level walker is correctness-equivalent (same
-        # oracle) but re-serializes fragments per level — measured 87.7 s vs
-        # 9.5 s here at sf0.1, kept out of the headline bench.
         from codepropertygraph_spark.sources import json_ingest
 
         # small part files coalesce into few input splits (openCost /
         # maxPartitionBytes); spread once so the walk is actually parallel
         aj = spark.read.parquet(f"{d}/ast_json.parquet").repartition(64)
-        return _force(json_ingest.json_tree_arrow(aj, "ast_id", "ast"))
+        return _force(json_ingest.json_tree(aj, "ast_id", "ast"))
 
     timed("kg_ast_json_tree", _json_tree, runs=2)
 

@@ -139,10 +139,9 @@ def cross_conv() -> None:
     T.run("frontier: materialize", lambda: _force(frontier))
 
     # phase 4: the final crossing level (stats + dispatch)
-    caches: list = []
     lv = T.run(
         "crossing: _crossing_pairs build+stats",
-        lambda: dataflow._crossing_pairs(frontier, depart, caches),
+        lambda: dataflow._crossing_pairs(frontier, depart),
     )
     T.run("crossing: expansion materialize", lambda: _force(lv))
 
@@ -211,8 +210,8 @@ def jsontree() -> None:
     T = Timer(spark)
     for i in range(3):
         T.run(
-            f"json_tree_arrow run {i}",
-            lambda: _force(json_ingest.json_tree_arrow(aj, "ast_id", "ast")),
+            f"json_tree run {i}",
+            lambda: _force(json_ingest.json_tree(aj, "ast_id", "ast")),
         )
     print(json.dumps(T.t))
     spark.stop()

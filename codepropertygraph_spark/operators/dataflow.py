@@ -548,9 +548,7 @@ def _salted_bridge_join(
     return l.join(r, keys + ["__salt"]).drop("__salt")
 
 
-def _crossing_pairs(
-    frontier: DataFrame, depart: DataFrame, caches: list[DataFrame]
-) -> DataFrame:
+def _crossing_pairs(frontier: DataFrame, depart: DataFrame) -> DataFrame:
     """Distinct (src, dst) pairs completing ONE more conversation crossing —
     the final level of :func:`reachable_cross_conversation`, where no later
     level consumes witness summaries, so only pair existence matters.
@@ -934,7 +932,7 @@ def reachable_cross_conversation(
                 # summaries, so only the distinct (src, dst) pairs are
                 # needed — dispatch to the adaptive pair step (pigeonhole
                 # fast path on dense corpora, plain expansion on sparse).
-                lv = _crossing_pairs(frontier, depart, _iter_caches)
+                lv = _crossing_pairs(frontier, depart)
                 levels.append(lv.withColumn("crossings", F.lit(depth)))
                 break
             # INTERMEDIATE level: the next crossing needs full witness
@@ -1497,44 +1495,13 @@ def reaching_defs_fields_ext(defs: DataFrame, uses: DataFrame) -> DataFrame:
     return cover.select(*out_cols).unionByName(ext.select(*out_cols))
 
 
-def reachable_within_auto(
-    edges: DataFrame,
-    max_hops: int = 4,
-    keyed_by: str = "conv_id",
-    group_edge_limit: int = 2_000_000,
-) -> DataFrame:
-    """Size-routed bounded closure — the shipped answer to the grouped
-    BFS's one-task-per-group ceiling. :func:`reachable_within_grouped` is
-    the fast path (one shuffle, group-local numpy BFS) but a single
-    pathological mega-conversation becomes one task's memory and wall
-    budget, and AQE cannot split an applyInPandas group. So: ONE
-    aggregation measures per-group edge counts; groups at or below
-    ``group_edge_limit`` take the grouped BFS, larger ones take the
-    iterative global join loop (:func:`reachable_within`), whose per-hop
-    equi-joins shuffle on (key, node) — AQE splits skewed keys there and
-    no task ever holds a whole group. Identical output either way
-    (both compute the distinct ≤ max_hops closure); the union is a plan
-    branch, not a correctness fork.
-
-    The default limit (~2M edges) keeps the dense-closure working set of a
-    single pandas group comfortably inside one executor task; tune down
-    for small executors or up for fat ones.
-    """
-    small_edges, big_edges = _split_big_groups(edges, keyed_by, group_edge_limit)
-    if big_edges is None:
-        return reachable_within_grouped(edges, max_hops=max_hops, keyed_by=keyed_by)
-    return reachable_within_grouped(
-        small_edges, max_hops=max_hops, keyed_by=keyed_by
-    ).unionByName(
-        reachable_within(big_edges, max_hops=max_hops, keyed_by=keyed_by)
-    )
-
-
 # ---------------------------------------------------------------------------
 # Join-loop formulations + size routing for every grouped operator
 # ---------------------------------------------------------------------------
-# applyInPandas sends one GROUP to one TASK; AQE cannot split it, so a
-# pathological mega-conversation is one straggler/OOM task at 100x scale.
+# The grouped walkers run as ``mapInArrow`` over a key-partitioned, key-
+# sorted repartition, which sends one GROUP to one TASK; AQE cannot split
+# it, so a pathological mega-conversation is one straggler/OOM task at 100x
+# scale.
 # Each grouped operator therefore gets (a) a join-loop formulation whose
 # per-iteration work is plain shuffled joins/aggregations (skewed keys split
 # by AQE, no task ever holds a whole group) and (b) an ``*_auto`` router:
@@ -1998,6 +1965,32 @@ def _route(
     if big is None:
         return grouped_fn(edges)
     return grouped_fn(small).unionByName(join_fn(big))
+
+
+def reachable_within_auto(
+    edges: DataFrame,
+    max_hops: int = 4,
+    keyed_by: str = "conv_id",
+    group_edge_limit: int = GROUP_EDGE_LIMIT,
+) -> DataFrame:
+    """Size-routed bounded closure — the shipped answer to the grouped
+    BFS's one-task-per-group ceiling. :func:`reachable_within_grouped` is
+    the fast path (one shuffle, group-local numpy BFS in a ``mapInArrow``
+    walker) but a single pathological mega-conversation becomes one task's
+    memory and wall budget, and AQE cannot split a key-partitioned group.
+    So groups at or below ``group_edge_limit`` take the grouped BFS, larger
+    ones the iterative global join loop (:func:`reachable_within`), whose
+    per-hop equi-joins shuffle on (key, node) — AQE splits skewed keys there
+    and no task ever holds a whole group. Identical output either way (both
+    compute the distinct ≤ max_hops closure).
+    """
+    return _route(
+        edges,
+        keyed_by,
+        group_edge_limit,
+        lambda e: reachable_within_grouped(e, max_hops=max_hops, keyed_by=keyed_by),
+        lambda e: reachable_within(e, max_hops=max_hops, keyed_by=keyed_by),
+    )
 
 
 def flow_witness_auto(

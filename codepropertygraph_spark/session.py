@@ -21,6 +21,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the host's CPU count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
+def driver_memory() -> str:
+    """``$SPARK_DRIVER_MEMORY``, else ~60% of the host's ``MemTotal``: in
+    local mode the driver heap IS the executor heap, and the rest is left
+    to the JVM's off-heap use and the Python workers."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    with open("/proc/meminfo") as fh:
+        kib = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    return f"{kib * 6 // 10 // 1024}m"
+
+
 def get_spark(
     app_name: str = "codepropertygraph_spark",
     master: str | None = None,
@@ -28,9 +45,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[<host_cpus()>]``; the driver heap to
+    :func:`driver_memory`.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = host_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -65,10 +83,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # local mode: the driver heap IS the executor heap — size it like an
-        # executor fleet (the sandbox has 128 GiB; cluster mode sets
-        # spark.executor.memory instead).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        # local mode: the driver heap IS the executor heap, sized from the
+        # host (cluster mode sets spark.executor.memory instead).
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

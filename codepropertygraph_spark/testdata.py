@@ -58,7 +58,8 @@ import pyarrow.parquet as pq
 from . import schema as S
 
 GENERATED_ROOT = os.environ.get(
-    "SPARK_GRAFT_GENERATED", "/root/repo/generated"
+    "SPARK_GRAFT_GENERATED",
+    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "generated"),
 )
 
 SEED = 42

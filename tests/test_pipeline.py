@@ -257,10 +257,7 @@ def test_kgql_console_over_warehouse(spark, warehouse):
     """The interactive query entry point (Console.scala analog) driven end to
     end over a committed warehouse: open, evaluate traversal expressions,
     meta-commands, and error discipline."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    import kgql
+    from tools import kgql
 
     g = kgql.build_view_from_warehouse(spark, warehouse)
     n_turns = int(kgql.evaluate(g, 'g.turns().count()'))
@@ -309,10 +306,7 @@ def test_kgql_bundle_roundtrip(spark, warehouse, tmp_path):
     """Console interchange loop: :export writes a bundle from the open
     warehouse; build_view_from_bundle reopens it with identical label
     counts and a working query surface."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    import kgql
+    from tools import kgql
 
     g = kgql.build_view_from_warehouse(spark, warehouse)
     bdir = str(tmp_path / "bundle")

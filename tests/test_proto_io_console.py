@@ -4,8 +4,6 @@ counts — the console half of ProtoCpgLoader.scala:23's save/load loop."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
 from codepropertygraph_spark.operators import proto_io, traversal
@@ -20,8 +18,7 @@ def warehouse(spark, transcripts, alias_dict, tmp_path_factory):
 
 
 def test_kgql_export_proto_roundtrip(spark, warehouse, tmp_path):
-    sys.path.insert(0, "/root/repo/tools")
-    import kgql
+    from tools import kgql
 
     g = kgql.build_view_from_warehouse(spark, warehouse)
     path = str(tmp_path / "graph.cpg.bin.zip")

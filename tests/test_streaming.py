@@ -1,4 +1,4 @@
-"""Streaming ingestion: foreachBatch triples over arriving files, with
+"""Streaming ingestion: exact triple streams over arriving files, with
 exactly-once checkpoint semantics (rerun adds nothing)."""
 
 from __future__ import annotations
@@ -12,62 +12,48 @@ from codepropertygraph_spark.operators import canonicalize, kg
 from codepropertygraph_spark.streaming import ingest
 
 
-def test_stream_triples_matches_batch(spark, transcripts, alias_dict, tmp_path):
-    base = str(tmp_path)
-    # one file per conversation bucket (pmod! xxhash64 % n can be negative)
-    for i in range(3):
-        part = transcripts.where(F.pmod(F.xxhash64("conv_id"), F.lit(3)) == i)
-        part.coalesce(1).write.mode("overwrite").parquet(f"{base}/tmp{i}")
+def _write_files(base, frames):
+    """Each frame becomes one parquet file ``{base}/in/file<i>.parquet``."""
     os.makedirs(f"{base}/in", exist_ok=True)
-    for i in range(3):
-        for f in os.listdir(f"{base}/tmp{i}"):
-            if f.endswith(".parquet"):
-                shutil.copy(f"{base}/tmp{i}/{f}", f"{base}/in/file{i}.parquet")
-
-    ingest.stream_triples(spark, f"{base}/in", alias_dict, f"{base}/out", f"{base}/ckpt")
-    got = {tuple(r) for r in spark.read.parquet(f"{base}/out").collect()}
-    batch = {tuple(r) for r in kg.final_triples(transcripts, alias_dict).collect()}
-    # whole conversations per file + one micro-batch drain → exact equality
-    assert got == batch
-
-    # exactly-once: rerun with the same checkpoint adds nothing
-    ingest.stream_triples(spark, f"{base}/in", alias_dict, f"{base}/out", f"{base}/ckpt")
-    got2 = {tuple(r) for r in spark.read.parquet(f"{base}/out").collect()}
-    assert got2 == got
-
-
-def test_stateful_follows_bridges_batches(spark, tmp_path):
-    """A conversation split across two arriving files: applyInPandasWithState
-    must emit the boundary follows pair the stateless path cannot see."""
-    from datetime import datetime
-
-    base = str(tmp_path)
-    rows1 = [("cS", 1, "user", "p1 mentions p2 x", None, datetime(2024, 1, 1, 0, 0, 0))]
-    rows2 = [("cS", 2, "assistant", "p2 mentions p1 y", None, datetime(2024, 1, 1, 0, 0, 10))]
-    schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    ad = spark.createDataFrame(
-        [("p1", "person_one", "PERSON", 0.9), ("p2", "person_two", "PERSON", 0.9)],
-        "alias string, canonical_name string, entity_type string, prior double",
-    )
-    import os, shutil
-
-    os.makedirs(f"{base}/in", exist_ok=True)
-    for i, rows in enumerate([rows1, rows2]):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(f"{base}/t{i}")
+    for i, df in enumerate(frames):
+        df.coalesce(1).write.mode("overwrite").parquet(f"{base}/t{i}")
         for f in os.listdir(f"{base}/t{i}"):
             if f.endswith(".parquet"):
                 shutil.copy(f"{base}/t{i}/{f}", f"{base}/in/file{i}.parquet")
 
-    ingest.stream_follows_stateful(spark, f"{base}/in", ad, f"{base}/out", f"{base}/ckpt")
-    got = {tuple(r) for r in spark.read.parquet(f"{base}/out").collect()}
-    assert ("cS", "person_two", "follows", "person_one") in got
+
+def _conv_buckets(transcripts, n=3):
+    # whole conversations per frame (pmod! xxhash64 % n can be negative)
+    return [
+        transcripts.where(F.pmod(F.xxhash64("conv_id"), F.lit(n)) == i)
+        for i in range(n)
+    ]
+
+
+def test_stream_triples_matches_batch(spark, transcripts, alias_dict, tmp_path):
+    base = str(tmp_path)
+    _write_files(base, _conv_buckets(transcripts))
+
+    ingest.stream_triples_exact(
+        spark, f"{base}/in", alias_dict, f"{base}/out", f"{base}/ckpt"
+    )
+    got = {tuple(r) for r in ingest.read_triples_exact(spark, f"{base}/out").collect()}
+    batch = {tuple(r) for r in kg.final_triples(transcripts, alias_dict).collect()}
+    assert got == batch
+
+    # exactly-once: rerun with the same checkpoint adds nothing
+    ingest.stream_triples_exact(
+        spark, f"{base}/in", alias_dict, f"{base}/out", f"{base}/ckpt"
+    )
+    got2 = {tuple(r) for r in ingest.read_triples_exact(spark, f"{base}/out").collect()}
+    assert got2 == got
 
 
 def test_stateful_follows_applies_merge_map(spark, tmp_path):
-    """Regression: the stateful path must emit POST-merge canonicals. The
-    dictionary carries a mergeable twin pair (token-Jaccard 2/3 ≥ 0.5), so a
-    pre-merge dictionary lookup would emit 'person_4_4dup' where batch
-    (kg.follows_triples) emits 'person_4'."""
+    """Regression: the stateful follows stream must emit POST-merge
+    canonicals. The dictionary carries a mergeable twin pair (token-Jaccard
+    2/3 ≥ 0.5), so a pre-merge dictionary lookup would emit 'person_4_4dup'
+    where batch (kg.follows_triples) emits 'person_4'."""
     from datetime import datetime
 
     base = str(tmp_path)
@@ -83,38 +69,19 @@ def test_stateful_follows_applies_merge_map(spark, tmp_path):
         ],
         "alias string, canonical_name string, entity_type string, prior double",
     )
-    import os, shutil
+    _write_files(base, [spark.createDataFrame(r, schema) for r in (rows1, rows2)])
 
-    os.makedirs(f"{base}/in", exist_ok=True)
-    for i, rows in enumerate([rows1, rows2]):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(f"{base}/t{i}")
-        for f in os.listdir(f"{base}/t{i}"):
-            if f.endswith(".parquet"):
-                shutil.copy(f"{base}/t{i}/{f}", f"{base}/in/file{i}.parquet")
-
-    ingest.stream_follows_stateful(spark, f"{base}/in", ad, f"{base}/out", f"{base}/ckpt")
-    got = {tuple(r) for r in spark.read.parquet(f"{base}/out").collect()}
+    ingest.stream_triples_exact(spark, f"{base}/in", ad, f"{base}/out", f"{base}/ckpt")
+    got = {tuple(r) for r in ingest.read_triples_exact(spark, f"{base}/out").collect()}
     # both sides resolve to the merged representative person_4
-    assert got == {("cM", "person_4", "follows", "person_4")}
+    follows = {t for t in got if t[2] == "follows"}
+    assert follows == {("cM", "person_4", "follows", "person_4")}
 
     # parity with the batch path on the concatenated input
     tr = spark.createDataFrame(rows1 + rows2, schema)
-    batch = {
-        tuple(r)
-        for r in kg.follows_triples(tr, ad, canonicalize.merge_map(ad)).collect()
-    }
-    assert got == batch
-
-
-def _write_files(spark, base, row_groups, schema):
-    os.makedirs(f"{base}/in", exist_ok=True)
-    for i, rows in enumerate(row_groups):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{base}/t{i}")
-        for f in os.listdir(f"{base}/t{i}"):
-            if f.endswith(".parquet"):
-                shutil.copy(f"{base}/t{i}/{f}", f"{base}/in/file{i}.parquet")
+    merge = canonicalize.merge_map(ad)
+    assert follows == {tuple(r) for r in kg.follows_triples(tr, ad, merge).collect()}
+    assert got == {tuple(r) for r in kg.final_triples(tr, ad).collect()}
 
 
 def test_stream_triples_exact_split_conversation(spark, tmp_path):
@@ -137,7 +104,7 @@ def test_stream_triples_exact_split_conversation(spark, tmp_path):
         [("p1", "person_one", "PERSON", 0.9), ("p2", "person_two", "PERSON", 0.9)],
         "alias string, canonical_name string, entity_type string, prior double",
     )
-    _write_files(spark, base, [rows1, rows2], schema)
+    _write_files(base, [spark.createDataFrame(r, schema) for r in (rows1, rows2)])
 
     ingest.stream_triples_exact(
         spark, f"{base}/in", ad, f"{base}/out", f"{base}/ckpt", max_files_per_trigger=1
@@ -181,7 +148,7 @@ def test_stream_triples_exact_out_of_order_arrival(spark, tmp_path):
         [("p1", "person_one", "PERSON", 0.9), ("p2", "person_two", "PERSON", 0.9)],
         "alias string, canonical_name string, entity_type string, prior double",
     )
-    _write_files(spark, base, [rows1, rows2], schema)
+    _write_files(base, [spark.createDataFrame(r, schema) for r in (rows1, rows2)])
 
     ingest.stream_triples_exact(
         spark, f"{base}/in", ad, f"{base}/out", f"{base}/ckpt", max_files_per_trigger=1
@@ -218,39 +185,6 @@ def test_stream_hourly_counts_match_batch(spark, tmp_path):
         .collect()
     }
     assert got == batch
-
-
-def test_stateful_follows_drops_late_turns(spark, tmp_path):
-    """Late-data policy: a turn arriving AFTER a later turn was already
-    committed to state is dropped rather than fabricating a follows edge
-    (the watermark analog; batch replay recovers the exact output)."""
-    from datetime import datetime
-
-    base = str(tmp_path)
-    schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    # file0 carries turns 1 and 3; file1 carries the LATE turn 2
-    rows0 = [
-        ("cL", 1, "user", "p1 mentions p2 a", None, datetime(2024, 1, 1, 0, 0, 0)),
-        ("cL", 3, "user", "p2 mentions p1 b", None, datetime(2024, 1, 1, 0, 0, 20)),
-    ]
-    rows1 = [("cL", 2, "user", "p1 mentions p1 c", None, datetime(2024, 1, 1, 0, 0, 10))]
-    ad = spark.createDataFrame(
-        [("p1", "person_one", "PERSON", 0.9), ("p2", "person_two", "PERSON", 0.9)],
-        "alias string, canonical_name string, entity_type string, prior double",
-    )
-    import os, shutil
-
-    os.makedirs(f"{base}/in", exist_ok=True)
-    for i, rows in enumerate([rows0, rows1]):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(f"{base}/t{i}")
-        for f in os.listdir(f"{base}/t{i}"):
-            if f.endswith(".parquet"):
-                shutil.copy(f"{base}/t{i}/{f}", f"{base}/in/file{i}.parquet")
-
-    ingest.stream_follows_stateful(spark, f"{base}/in", ad, f"{base}/out", f"{base}/ckpt")
-    got = {tuple(r) for r in spark.read.parquet(f"{base}/out").collect()}
-    # in-order pair (t3 follows t1) emitted; the late t2 produced nothing
-    assert got == {("cL", "person_two", "follows", "person_one")}
 
 
 def test_stream_dedup_keep_list_first_seen_wins(spark, tmp_path):
@@ -310,14 +244,7 @@ def test_stream_diff_zips_rebuild_graph(spark, transcripts, alias_dict, tmp_path
     from codepropertygraph_spark.operators import graph as G
 
     base = str(tmp_path)
-    for i in range(3):
-        part = transcripts.where(F.pmod(F.xxhash64("conv_id"), F.lit(3)) == i)
-        part.coalesce(1).write.mode("overwrite").parquet(f"{base}/tmp{i}")
-    os.makedirs(f"{base}/in", exist_ok=True)
-    for i in range(3):
-        for f in os.listdir(f"{base}/tmp{i}"):
-            if f.endswith(".parquet"):
-                shutil.copy(f"{base}/tmp{i}/{f}", f"{base}/in/file{i}.parquet")
+    _write_files(base, _conv_buckets(transcripts))
 
     ingest.stream_diff_zips(
         spark, f"{base}/in", alias_dict, f"{base}/zips", f"{base}/ckpt_dz"

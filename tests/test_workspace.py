@@ -94,10 +94,7 @@ def test_next_overlay_dir_name(spark, tmp_path, corpus_dir):
 def test_run_script_bindings_and_result(spark, tmp_path, corpus_dir):
     """Script contract: bound g/F/S/params; result = run(g, params) return
     or the top-level `result` variable; parity with direct evaluation."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    import kgql
+    from tools import kgql
 
     ws = W.WorkspaceManager(spark, str(tmp_path / "ws"))
     p = ws.create_project(corpus_dir, "alpha")

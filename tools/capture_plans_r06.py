@@ -68,7 +68,7 @@ def main() -> None:
         "kg_mentions": lambda: extraction.mention_surfaces(tr, ad),
         "kg_raw_triples": lambda: extraction.raw_triples(tr),
         "kg_merge_map": lambda: canonicalize.merge_map(ad),
-        "kg_ast_json_tree": lambda: json_ingest.json_tree_arrow(aj, "ast_id", "ast"),
+        "kg_ast_json_tree": lambda: json_ingest.json_tree(aj, "ast_id", "ast"),
         "kg_reachable_4hop": lambda: dataflow.reachable_within_auto(
             follows_edges, max_hops=4
         ),

@@ -8,11 +8,12 @@ names, and an order-insensitive value hash. Usage:
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -42,7 +43,7 @@ def main():
     import __spark_entry__ as E
     from codepropertygraph_spark.session import get_spark
 
-    spark = get_spark(master="local[16]")
+    spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
