@@ -346,6 +346,30 @@ def test_json_tree_golden(spark):
     assert parents <= ids
 
 
+def test_json_tree_rejects_overdeep_documents(spark):
+    """There is no fixed depth budget any more, but a document nested past
+    the JSON parser's nesting limit must fail the job loudly — never come
+    back as a silently truncated tree. Just below that limit, the walk is
+    complete."""
+    import pytest as _pytest
+
+    from codepropertygraph_spark.sources import json_ingest
+
+    def nested(n):
+        return '{"a":' * n + "1" + "}" * n
+
+    schema = "ast_id long, ast string"
+    too_deep = spark.createDataFrame([(1, nested(5000))], schema)
+    with _pytest.raises(Exception, match="RecursionError"):
+        json_ingest.json_tree(too_deep, "ast_id", "ast").collect()
+
+    deep = json_ingest.json_tree(
+        spark.createDataFrame([(2, nested(500))], schema), "ast_id", "ast"
+    ).collect()
+    assert len(deep) == 501
+    assert max(r.depth for r in deep) == 500
+
+
 def test_json_tree_matches_generator(spark):
     """The walked tree of a generated turn's AST-JSON reproduces the clause
     structure the extraction pipeline sees (A3 <-> A2 consistency)."""
